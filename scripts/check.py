@@ -5,13 +5,16 @@ Runs graft.Verify (already-compiled classes) on a given SF dir, then for
 each query compares the Spark parquet result against the DuckDB oracle
 SQL, sorting columns by name and rows by all columns, exact equality.
 
-Usage: python3 scripts/check.py [sfdir] [only_query_prefix]
+Usage: python3 scripts/check.py [sfdir] [lane_prefix ...]
+
+With prefixes, Verify runs only the matching lanes and only those are
+compared; a selected lane with an oracle but no fresh output still fails.
 """
 import json, os, subprocess, sys, glob
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-ONLY = sys.argv[2] if len(sys.argv) > 2 else ""
+ONLY = sys.argv[2:]
 # Per-process output dir: concurrent check.py runs sharing one dir
 # rmtree each other mid-run — the r11 phantom-failure class ("produced
 # no output" / cross-contaminated parquet for queries that are green).
@@ -37,7 +40,7 @@ def run_verify():
            ["-Xmx8g", "-XX:ReservedCodeCacheSize=1g",
             "-Dspark.ui.enabled=false",
             "-Dspark.sql.session.timeZone=UTC",
-            "-cp", cp, "graft.Verify", SF, OUT])
+            "-cp", cp, "graft.Verify", SF, OUT] + ONLY)
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
     r = subprocess.run(cmd, env=env, capture_output=True, text=True)
     for line in r.stderr.splitlines():
@@ -59,7 +62,7 @@ def compare():
     dirs = set(d for d in os.listdir(OUT)
                if os.path.isdir(os.path.join(OUT, d)))
     for name in sorted(dirs | set(oracle)):
-        if ONLY and not name.startswith(ONLY):
+        if ONLY and not name.startswith(tuple(ONLY)):
             continue
         if name not in dirs:
             print(f"FAIL {name}: query produced no output (crashed?)")

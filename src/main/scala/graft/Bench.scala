@@ -1,8 +1,12 @@
 package graft
 import java.util.Locale
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
+  *
+  * `graft.Bench [lane-prefix ...]`: with prefixes, only the matching
+  * lanes are timed (same sampling, same line shape, every selected lane
+  * in "queries") and no file is written — bench_detail.json,
+  * bench_line.json and bench_history.json describe full runs only.
   *
   * The driver captures only a bounded tail of stdout, so the single
   * stdout JSON line stays compact: total + a fixed headline subset of
@@ -86,14 +90,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val full = args.isEmpty
+    val lanes = SparkEntry.lanes(args.toSeq)
+    val spark = SparkEntry.session(SparkEntry.envCpus)
     val history = loadHistory(sfDir)
     // JIT/codegen warmup so the first measured query isn't charged
     // for JVM compilation of the whole scan/agg stack, and one-time
@@ -101,7 +100,7 @@ object Bench {
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
     graft.pipeline.Messages.corpusDir(spark, sfDir)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = lanes.toSeq.sortBy(_._1).map { case (name, fn) =>
       def once(): (Double, Boolean) = {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
@@ -144,38 +143,43 @@ object Bench {
     // time-to-failure would otherwise masquerade as a fast success)
     val total = results.collect { case (_, dt, true, _, _, _, _) => dt }.sum
     val failed = results.collect { case (n, _, false, _, _, _, _) => n }
-    val detail = results
-      .map { case (n, dt, ok, dt1, dt2, dt3, stalled) =>
-        val s3 = dt3.map(d => s""","s3":${fmt(d)}""").getOrElse("")
-        s""""$n":{"sec":${fmt(dt)},"ok":$ok,"s1":${fmt(dt1)},"s2":${fmt(dt2)}$s3,"stalled":$stalled}""" }
-      .mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_detail.json"), detail + "\n")
-    // Ratchet the floor history down with this run's observations —
-    // only at the floor file's own SF (see historyApplies).
-    if (historyApplies(sfDir) && historyComplete) {
-      val merged = (history.keySet ++ results.collect { case (n, _, true, _, _, _, _) => n })
-        .toSeq.sorted.map { n =>
-          val obs = results.collectFirst { case (`n`, d, true, _, _, _, _) => d }
-          val f = (history.get(n).toSeq ++ obs.toSeq).min
-          s""""$n":${fmt(f)}"""
-        }.mkString("{", ",", "}")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("bench_history.json"), merged + "\n")
-    }
     val qs = results
-      .collect { case (n, dt, _, _, _, _, _) if headline.contains(n) => s""""$n":${fmt(dt)}""" }
+      .collect { case (n, dt, _, _, _, _, _) if !full || headline.contains(n) => s""""$n":${fmt(dt)}""" }
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}"""
-    // Stable file copy of the exact stdout line (r14: the driver's
-    // parser got nothing out of the captured tail because sbt's logger
-    // prefixed the line; build.sbt now uses StdoutOutput, and this file
-    // is the belt-and-braces second channel).
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_line.json"), line + "\n")
+    // The line goes out before any file is written, so a failed write
+    // cannot suppress it.
     println(line)
     Console.out.flush()
+    if (full) {
+      // Stable file copy of the exact stdout line (r14: a parser of the
+      // captured tail got nothing out of it because sbt's logger prefixed
+      // the line; build.sbt now uses StdoutOutput, and this file is the
+      // belt-and-braces second channel).
+      scala.util.Try(java.nio.file.Files.writeString(
+        java.nio.file.Paths.get("bench_line.json"), line + "\n"))
+        .failed.foreach(e => System.err.println(s"[bench] bench_line.json not written: $e"))
+      val detail = results
+        .map { case (n, dt, ok, dt1, dt2, dt3, stalled) =>
+          val s3 = dt3.map(d => s""","s3":${fmt(d)}""").getOrElse("")
+          s""""$n":{"sec":${fmt(dt)},"ok":$ok,"s1":${fmt(dt1)},"s2":${fmt(dt2)}$s3,"stalled":$stalled}""" }
+        .mkString("{", ",", "}")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get("bench_detail.json"), detail + "\n")
+      // Ratchet the floor history down with this run's observations —
+      // only at the floor file's own SF (see historyApplies).
+      if (historyApplies(sfDir) && historyComplete) {
+        val merged = (history.keySet ++ results.collect { case (n, _, true, _, _, _, _) => n })
+          .toSeq.sorted.map { n =>
+            val obs = results.collectFirst { case (`n`, d, true, _, _, _, _) => d }
+            val f = (history.get(n).toSeq ++ obs.toSeq).min
+            s""""$n":${fmt(f)}"""
+          }.mkString("{", ",", "}")
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get("bench_history.json"), merged + "\n")
+      }
+    }
     spark.stop()
   }
 }

@@ -10,13 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.session(8, logLevel = "ERROR")
 
     // WindowGroupLimit = per-partition top-k pushed below the shuffle;
     // codegen is checked on the AQE-final executed plan ("*(n) Op").
@@ -51,9 +45,12 @@ object PlanAudit {
       // centroid fan-out; the quadratic pass must stay confined to a
       // cell EQUI-join (cid key), never a corpus cross join
       "q_dedup_semantic" -> Seq("BroadcastNestedLoopJoin", "cosine", "HashAggregate", "!CartesianProduct"),
-      // k-hop BFS: frontier expansion is keyed joins + anti-joins
-      // against the visited set — no loop join anywhere
-      "q_graph_bfs" -> Seq("LeftAnti", "HashAggregate", "!NestedLoop", "!CartesianProduct"),
+      // k-hop BFS: each round's visited generation is a lineage cut, so
+      // the final plan is the visited RDD scan; the round itself is
+      // audited as q_graph_bfs::round (frontier equi-join + anti-join
+      // against the visited set) — no loop join anywhere
+      "q_graph_bfs" -> Seq("Scan ExistingRDD", "!NestedLoop", "!CartesianProduct"),
+      "q_graph_bfs::round" -> Seq("LeftAnti", "HashAggregate", "!NestedLoop", "!CartesianProduct"),
       // convergence BFS (r9): the loop ran on the checkpoint engine, so
       // the final plan is the visited RDD scan — and building it must
       // never have fallen back to a loop join (the per-round plans are
@@ -627,7 +624,9 @@ object PlanAudit {
     // under a "<query>::<stage>" name.
     val internal: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
       "q_multimodal_neardup::edges" ->
-        ((s, d) => graft.queries.MultimodalQ.neardupEdges(s, d)))
+        ((s, d) => graft.queries.MultimodalQ.neardupEdges(s, d)),
+      "q_graph_bfs::round" ->
+        ((s, d) => graft.queries.Graph.bfsFirstRound(s, d)))
 
     val misses = scala.collection.mutable.ArrayBuffer.empty[String]
     var nOk = 0

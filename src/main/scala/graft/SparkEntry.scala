@@ -31,9 +31,9 @@ object SparkEntry {
     * in selects that are analyzed BEFORE their first registering helper
     * runs, which only worked when an alphabetically-earlier lane had
     * already registered the temp functions in the shared session
-    * (ADVICE r14: q_sim_nprobe / q_sim_binary crashed under
-    * single-query RunOne/QBench in a fresh session). Registration is a
-    * handful of hashmap puts — negligible per call.
+    * (ADVICE r14: q_sim_nprobe / q_sim_binary crashed when run alone in
+    * a fresh session). Registration is a handful of hashmap lookups —
+    * negligible per call.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map { d =>
@@ -42,6 +42,32 @@ object SparkEntry {
         d.fn(s, dir)
       }
     }.toMap
+
+  /** The lanes whose names start with any of `prefixes`; every lane
+    * when none is given. Fails on a filter that selects nothing, so a
+    * mistyped name cannot pass as an empty run. */
+  def lanes(prefixes: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val picked = queries.filter { case (n, _) =>
+      prefixes.isEmpty || prefixes.exists(n.startsWith) }
+    require(picked.nonEmpty, s"no lane matches ${prefixes.mkString(" ")}")
+    picked
+  }
+
+  /** The local session the mains and specs run on: `local[cpus]` with
+    * as many shuffle partitions, UTC session time, no UI. */
+  def session(cpus: Int, logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** Core count of Bench and Verify (`SPARK_GRAFT_CPUS`, default 4). */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

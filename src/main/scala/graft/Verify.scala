@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, MapType, StructType}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -35,18 +34,14 @@ object Verify {
     }
   }
 
+  /** `graft.Verify <sfDir> <outDir> [lane-prefix ...]`: with prefixes,
+    * only the matching lanes are dumped; oracle_sql.json is always full. */
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir) = args.take(2)
+    val lanes = SparkEntry.lanes(args.drop(2).toSeq)
+    val spark = SparkEntry.session(SparkEntry.envCpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    lanes.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         assertComparatorSafe(name, df.schema)

@@ -234,9 +234,10 @@ case class SimHash16(child: Expression)
     while (i < n) {
       val s = arr.getUTF8String(i)
       // input contract: md5 hex strings (every call site feeds literal
-      // md5() output). Reading 16 bytes of anything shorter would be
-      // out-of-bounds, so fail loudly instead (VERDICT r14 §3).
-      if (s.numBytes() < 16)
+      // md5() output). Reading 16 bytes of anything shorter (or of a
+      // null element) would be out-of-bounds, so fail loudly instead
+      // (VERDICT r14 §3).
+      if (s == null || s.numBytes() < 16)
         throw new IllegalArgumentException(
           s"simhash16 expects md5 hex strings (>=16 bytes), got '$s'")
       var j = 0
@@ -267,7 +268,7 @@ case class SimHash16(child: Expression)
          |int[] $counts = new int[16];
          |for (int $i = 0; $i < $a.numElements(); $i++) {
          |  org.apache.spark.unsafe.types.UTF8String $s = $a.getUTF8String($i);
-         |  if ($s.numBytes() < 16) throw new IllegalArgumentException(
+         |  if ($s == null || $s.numBytes() < 16) throw new IllegalArgumentException(
          |    "simhash16 expects md5 hex strings (>=16 bytes), got '" + $s + "'");
          |  for (int $j = 0; $j < 16; $j++) {
          |    if ($s.getByte($j) >= (byte) '8') $counts[$j]++; else $counts[$j]--;
@@ -380,12 +381,11 @@ case class MinHash8(child: Expression)
 /** Runtime of [[IntersectSize]] (static helper so codegen is one call
   * into compiled Scala, the [[MinHashUtil]] pattern). */
 object ArraySetUtil {
-  /** |a ∩ b| for two string arrays whose elements are DISTINCT within
-    * each array (the tokenizer's array_distinct output) — exactly
-    * `size(array_intersect(a, b))` on such inputs, without
-    * materializing the intersect array. Builds the hash set over the
-    * SMALLER side (the count is symmetric for distinct inputs).
-    * Non-null elements only (every call site feeds split() output). */
+  /** |a ∩ b| over distinct elements — exactly
+    * `size(array_intersect(a, b))`, without materializing the
+    * intersect array. Builds the hash set over the SMALLER side and
+    * removes each hit from it, so a value repeated on either side
+    * counts once (the count is symmetric). */
   def interSize(a: org.apache.spark.sql.catalyst.util.ArrayData,
       b: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
     val (small, large) = if (a.numElements() <= b.numElements()) (a, b) else (b, a)
@@ -397,15 +397,15 @@ object ArraySetUtil {
     var c = 0
     i = 0
     while (i < m) {
-      if (set.contains(large.getUTF8String(i))) c += 1
+      if (set.remove(large.getUTF8String(i))) c += 1
       i += 1
     }
     c
   }
 }
 
-/** `inter_size(a, b)` == `size(array_intersect(a, b))` for arrays that
-  * are already element-distinct — the exact-Jaccard verify hot path
+/** `inter_size(a, b)` == `size(array_intersect(a, b))` — the
+  * exact-Jaccard verify hot path
   * (the predicate runs once in the join filter and once in the value
   * projection per candidate; array_intersect allocates and returns the
   * intersect ARRAY both times just to take its size). */
@@ -488,14 +488,14 @@ object VectorFunctions {
     * this call, and re-registration would log one
     * `SimpleFunctionRegistry ... replaced` WARN per function per query
     * (thousands of stderr lines in a full bench run, polluting the
-    * driver's captured tail). The LAST spec's presence implies all
-    * earlier ones landed (specs register in order). */
+    * captured tail), so only names the session lacks are
+    * registered — each name is checked, so a session holding some of
+    * them still gets the rest. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(specs.last._1))) return
     specs.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -22,13 +21,7 @@ import graft.Tables
 object CorpusDelta {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.session(32, logLevel = "ERROR")
     graft.functions.VectorFunctions.register(spark)
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()

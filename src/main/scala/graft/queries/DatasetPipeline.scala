@@ -103,27 +103,24 @@ import graft.functions.VectorFunctions
   * downstream action re-canonicalizes that plan for the cache
   * lookup — measured SECONDS of driver time per action at this DAG's
   * depth (and 5-24 s per component-loop round before
-  * [[Dedup.componentLabels]] checkpointed its edge table). Stage-level
-  * timing probe: `runMain graft.queries.CleanFullProbe <sfDir>`. */
+  * [[Dedup.componentLabels]] checkpointed its edge table). Each eager
+  * stage runs its jobs under a Spark job description naming the stage
+  * ("s1 quality train+join", ...), so a listener can attribute the
+  * DAG's cost stage by stage. */
 object DatasetPipeline {
 
   private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-  /** Stage-boundary timing for [[CleanFullProbe]]: the stage chain's
-    * boundaries are EAGER localCheckpoints, so all the work happens
-    * inside [[stages]]/[[stagesIncr]] and downstream counts time
-    * nothing. Enabled by env `GRAFT_STAGE_TICK` (inherited by the
-    * forked probe JVM); one cached boolean otherwise. */
-  private val tickOn = sys.env.contains("GRAFT_STAGE_TICK")
-  private[queries] def tick[A](label: String)(f: => A): A =
-    if (!tickOn) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[stage-tick] $label%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+  /** Runs `f` with `label` as the job description of every Spark job
+    * it starts. The stage chain's boundaries are EAGER localCheckpoints,
+    * so all the work happens inside [[stages]]/[[stagesIncr]] and is
+    * labeled here; the caller's description is restored afterwards. */
+  private def stage[A](s: org.apache.spark.sql.SparkSession, label: String)(f: => A): A = {
+    val sc = s.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try f finally sc.setJobDescription(prev)
+  }
 
   // stage-5 PII patterns — the [[TextAnalysis.piiRedact]] pair, kept in
   // the RE2 ∩ java.util.regex dialect so Spark and DuckDB agree
@@ -140,7 +137,7 @@ object DatasetPipeline {
        |    * sqrt(list_reduce(list_transform(range(1, 65),
        |      i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x,y) -> x+y)))""".stripMargin
 
-  /** Stage outputs, returned so the lane and [[CleanFullProbe]] /
+  /** Stage outputs, returned so the lane and
     * [[graft.DatasetPipelineSpec]] run the identical DAG. */
   private[queries] case class Stages(
       docsQ: org.apache.spark.sql.DataFrame,   // stage-1 survivors + score
@@ -159,7 +156,7 @@ object DatasetPipeline {
     import org.apache.spark.sql.expressions.Window
     VectorFunctions.register(s)
     // stage 1 — trained quality filter (scorer trains on the raw corpus)
-    val docsQ = tick("s1 quality train+join")(Tables.documents(s, dir)
+    val docsQ = stage(s, "s1 quality train+join")(Tables.documents(s, dir)
       .join(TextAnalysis.qualityScored(s, dir)
         .filter(col("score") >= 0.5).select(col("doc_id"), col("score")),
         Seq("doc_id"))
@@ -183,20 +180,20 @@ object DatasetPipeline {
       .select(col("doc_id"), explode(expr(gramsOf)).as("gh"))
       .join(broadcast(benchG), col("gh") === col("bh"), "left_semi")
       .select(col("doc_id")).distinct()
-    val docsD = tick("s2 decontam")(
+    val docsD = stage(s, "s2 decontam")(
       docsQ.join(contam, Seq("doc_id"), "left_anti").localCheckpoint(true))
     // stage 3 — split-ladder pairs + signature cliques + contracted
     // components + longest-doc survivorship, on decontaminated survivors
     val (w, sig, verified) = Dedup.splitPipelineOn(docsD)
     val grp = sig.groupBy(col("sg")).agg(min(col("doc_id")).as("rep"))
     val m = sig.join(grp, Seq("sg")).select(col("doc_id"), col("rep")).persist(lvl)
-    val ranked = tick("s3 ladder+loop+rank")(Dedup.contractedClusters(m, verified)
+    val ranked = stage(s, "s3 ladder+loop+rank")(Dedup.contractedClusters(m, verified)
       .join(w.select(col("doc_id"), expr("size(ws)").as("n_words")), Seq("doc_id"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("cluster_id")).orderBy(col("n_words").desc, col("doc_id"))))
       .select(col("doc_id"), col("cluster_id"), col("rn"))
       .localCheckpoint(true))
-    val s1 = tick("s3 survivor cut")(docsD
+    val s1 = stage(s, "s3 survivor cut")(docsD
       .join(ranked.filter(col("rn") > 1).select(col("doc_id")), Seq("doc_id"), "left_anti")
       .localCheckpoint(true))
     // stage 4 — SemDeDup cells over the embedded subset of survivors,
@@ -212,10 +209,10 @@ object DatasetPipeline {
       .select((row_number().over(Window.orderBy(col("vec_id"))) - 1).as("k"),
         col("embedding").as("ke"))
     val va0 = Similarity.coarseAssign(e1, coS).persist(lvl)
-    val co1 = tick("s4 lloyd step 1")(
+    val co1 = stage(s, "s4 lloyd step 1")(
       Similarity.lloydStepFrom(e1, va0).localCheckpoint(true))
     val va1 = Similarity.coarseAssign(e1, co1).persist(lvl)
-    val co2 = tick("s4 lloyd step 2")(
+    val co2 = stage(s, "s4 lloyd step 2")(
       Similarity.lloydStepFrom(e1, va1).localCheckpoint(true))
     val asg = Similarity.coarseAssign(e1, co2)
       .select(col("vec_id"), col("list"))
@@ -227,13 +224,13 @@ object DatasetPipeline {
         col("list") === col("list2") && col("mate") < col("vec_id"))
       .filter(expr("cosine_sim(ea, eb)") >= 0.3)
       .select(col("vec_id").as("doc_id")).distinct()
-    val s2 = tick("s4 semdedup cut")(
+    val s2 = stage(s, "s4 semdedup cut")(
       s1.join(semDrop, Seq("doc_id"), "left_anti").localCheckpoint(true))
     // stage 5 — PII REDACTION (r13): the piiRedact enrichment+mask run
     // map-only over the dedup survivors; `text` is REPLACED by its
     // redacted form so every downstream tokenization counts the masked
     // corpus, and n_pii rides along as the audit column
-    val pii = tick("s5 pii redact")(s2
+    val pii = stage(s, "s5 pii redact")(s2
       .withColumn("txt", concat(col("text"), lit(" contact user"),
         col("doc_id").cast("string"), lit("@mail.example.com from 10.0."),
         (col("doc_id") % 256).cast("string"), lit(".7 thanks")))
@@ -268,7 +265,7 @@ object DatasetPipeline {
       .select(col("doc_id"), explode(expr("array(i, i + 1)")).as("p"))
       .distinct()
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_struck"))
-    val toks = tick("s6 boilerplate strike")(wt.join(struck, Seq("doc_id"), "left")
+    val toks = stage(s, "s6 boilerplate strike")(wt.join(struck, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"), col("source"), col("n_pii"),
         size(col("ws")).cast("long").as("n_tok_raw"),
         (size(col("ws")).cast("long") - coalesce(col("n_struck"), lit(0L))).as("n_tok"),
@@ -475,7 +472,7 @@ object DatasetPipeline {
     // frozen scorer; quality survivors of BOTH generations
     val qk = TextAnalysis.qualityScoredFrozen(s, dir)
       .filter(col("score") >= 0.5).select(col("doc_id"), col("score"))
-    val aq = tick("i1 frozen quality+join")(
+    val aq = stage(s, "i1 frozen quality+join")(
       Tables.documents(s, dir).join(qk, Seq("doc_id")).localCheckpoint(true))
     val w = aq.select(col("doc_id"),
         expr(s"array_distinct(${Tokenize.spark})").as("ws"))
@@ -497,7 +494,7 @@ object DatasetPipeline {
         col("bk") === col("bk2") && col("d1") < col("d2"))
       .join(osized, Seq("bk"), "left_semi")
       .select(col("d1"), col("d2")).distinct()
-    val olabels = tick("i2 old-gen components")(componentLabelsOf(verify(ocand)))
+    val olabels = stage(s, "i2 old-gen components")(componentLabelsOf(verify(ocand)))
     // nightly delta: capped-bucket candidates touching a new doc,
     // bucket caps from TODAY'S full band table — old×old never forms
     val fsized = bands.groupBy(col("bk")).count()
@@ -514,14 +511,14 @@ object DatasetPipeline {
       .join(olabels.select(col("node").as("doc_id"), col("lbl")), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("rep"))
       .persist(lvl)
-    val merged = tick("i3 delta merge loop")(
+    val merged = stage(s, "i3 delta merge loop")(
       Dedup.contractedClusters(m, ipairs).persist(lvl))
     // day-0 survivorship over OLD clusters
     val oranked = olabels.select(col("node").as("doc_id"), col("lbl").as("prior"))
       .join(w.select(col("doc_id"), expr("size(ws)").as("n_words")), Seq("doc_id"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("prior")).orderBy(col("n_words").desc, col("doc_id"))))
-    val s1o = tick("i4 day-0 survivors")(aq.filter(col("doc_id") % 10 =!= 0)
+    val s1o = stage(s, "i4 day-0 survivors")(aq.filter(col("doc_id") % 10 =!= 0)
       .join(oranked.filter(col("rn") > 1).select(col("doc_id")), Seq("doc_id"), "left_anti")
       .localCheckpoint(true))
     // day-0 SemDeDup: train the K=8 cells on old embedded survivors
@@ -532,10 +529,10 @@ object DatasetPipeline {
       .select((row_number().over(Window.orderBy(col("vec_id"))) - 1).as("k"),
         col("embedding").as("ke"))
     val va0 = Similarity.coarseAssign(e1o, coS).persist(lvl)
-    val co1 = tick("i5 lloyd step 1")(
+    val co1 = stage(s, "i5 lloyd step 1")(
       Similarity.lloydStepFrom(e1o, va0).localCheckpoint(true))
     val va1 = Similarity.coarseAssign(e1o, co1).persist(lvl)
-    val co2 = tick("i5 lloyd step 2")(
+    val co2 = stage(s, "i5 lloyd step 2")(
       Similarity.lloydStepFrom(e1o, va1).localCheckpoint(true)) // FROZEN cells
     val asgo = Similarity.coarseAssign(e1o, co2)
       .select(col("vec_id"), col("list")).join(e1o, Seq("vec_id")).persist(lvl)
@@ -545,7 +542,7 @@ object DatasetPipeline {
         col("list") === col("list2") && col("mate") < col("vec_id"))
       .filter(expr("cosine_sim(ea, eb)") >= 0.3)
       .select(col("vec_id").as("doc_id")).distinct()
-    val s2o = tick("i6 day-0 semdedup cut")(
+    val s2o = stage(s, "i6 day-0 semdedup cut")(
       s1o.join(semdropo, Seq("doc_id"), "left_anti").localCheckpoint(true))
     // nightly stage 2: append-only survivorship against the merge
     val hasOld = merged.filter(col("doc_id") % 10 =!= 0)
@@ -557,7 +554,7 @@ object DatasetPipeline {
         Window.partitionBy(col("cluster_id")).orderBy(col("n_words").desc, col("doc_id"))))
     val ndrop = nmerged.join(hasOld, Seq("cluster_id"), "left_semi").select(col("doc_id"))
       .union(nonly.filter(col("rn") > 1).select(col("doc_id"))).distinct()
-    val s1n = tick("i7 nightly survivors")(aq.filter(col("doc_id") % 10 === 0)
+    val s1n = stage(s, "i7 nightly survivors")(aq.filter(col("doc_id") % 10 === 0)
       .join(ndrop, Seq("doc_id"), "left_anti")
       .localCheckpoint(true))
     // nightly stage 3: frozen-cell assignment, drop vs store + batch
@@ -585,7 +582,7 @@ object DatasetPipeline {
     def toks(df: org.apache.spark.sql.DataFrame) =
       df.select(col("doc_id"), col("lang"), col("source"),
         size(expr(Tokenize.sparkTrim)).cast("long").as("n_tok"))
-    val wto = tick("i8 day-0 token counts")(toks(s2o).localCheckpoint(true))
+    val wto = stage(s, "i8 day-0 token counts")(toks(s2o).localCheckpoint(true))
     val packo = wto.withColumn("seq_no",
       floor((sum(col("n_tok")).over(wp) - col("n_tok")) / lit(512.0)).cast("long"))
     val obase = wto.groupBy(col("source")).agg(sum(col("n_tok")).as("base_tok"))

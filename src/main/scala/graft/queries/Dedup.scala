@@ -287,11 +287,6 @@ object Dedup {
     * pairs whose candidates come from banded LSH with hot-bucket
     * SPLITTING ([[dedupLshSplit]]); [[dedupClusters]] reuses the
     * first two for its signature-identical cliques + survivorship. */
-  /** Probe hook for [[ClustersProbe]] (dev timing tool). */
-  private[queries] def splitPipelineForProbe(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame) = splitPipeline(s, dir)
-
   private def splitPipeline(s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
          org.apache.spark.sql.DataFrame) =

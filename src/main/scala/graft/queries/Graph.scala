@@ -287,6 +287,31 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
+  /** One [[bfsHops]] round: the nodes first reached at hop `d` from
+    * the `visited(node, dist)` generation — frontier equi-join, then
+    * an anti-join against everything visited. */
+  private def bfsRound(bi: org.apache.spark.sql.DataFrame,
+      visited: org.apache.spark.sql.DataFrame, d: Int): org.apache.spark.sql.DataFrame =
+    bi.join(visited.filter(col("dist") === (d - 1)).select(col("node")),
+        col("src") === col("node"))
+      .select(col("dst").as("node")).distinct()
+      .join(visited.select(col("node").as("vn")),
+        col("node") === col("vn"), "left_anti")
+      .withColumn("dist", lit(d.toLong))
+
+  // 1-row source — broadcast by AQE size rules, no hint needed
+  private def bfsSource(bi: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    bi.agg(min(col("src")).as("node")).withColumn("dist", lit(0L)).localCheckpoint(true)
+
+  /** The first [[bfsHops]] round, which the per-round lineage cuts hide
+    * from the lane's final plan — exposed so PlanAudit can assert the
+    * round's join shapes. */
+  private[graft] def bfsFirstRound(s: org.apache.spark.sql.SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame = {
+    val bi = coPurchaseAdj(s, dir)
+    bfsRound(bi, bfsSource(bi), 1)
+  }
+
   /** K-HOP BFS — single-source shortest hop distances (dist <= 3)
     * over the part CO-PURCHASE graph: parts are adjacent when some
     * order contains both. Source = the minimum part id in the graph;
@@ -335,7 +360,6 @@ object Graph {
          |SELECT CAST(node AS BIGINT) AS part_id, CAST(dist AS BIGINT) AS dist
          |FROM v3""".stripMargin) { (s, dir) =>
       val bi = coPurchaseAdj(s, dir)
-      // 1-row source — broadcast by AQE size rules, no hint needed.
       // Each round's visited generation is an EAGER lineage cut, not a
       // lazy persist (r15, the r10 plan-canonicalization lesson the
       // convergence twin already applied): the old single lazy plan
@@ -344,18 +368,9 @@ object Graph {
       // the hop count, and all three generations stayed pinned.
       // Checkpointing bounds the plan each round reads to a LogicalRDD
       // leaf and releases the superseded generation (≤ |V| rows each).
-      var visited = bi.agg(min(col("src")).as("node"))
-        .withColumn("dist", lit(0L))
-        .localCheckpoint(true)
+      var visited = bfsSource(bi)
       for (d <- 1 to 3) {
-        val fresh = bi
-          .join(visited.filter(col("dist") === (d - 1)).select(col("node")),
-            col("src") === col("node"))
-          .select(col("dst").as("node")).distinct()
-          .join(visited.select(col("node").as("vn")),
-            col("node") === col("vn"), "left_anti")
-          .withColumn("dist", lit(d.toLong))
-        val next = visited.union(fresh).localCheckpoint(true)
+        val next = visited.union(bfsRound(bi, visited, d)).localCheckpoint(true)
         Fixpoint.release(visited)
         visited = next
       }

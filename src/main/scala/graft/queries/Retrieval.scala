@@ -133,35 +133,39 @@ object Retrieval {
         .withColumn("psim", expr("cosine_sim(embedding, eb)"))
         .select(col("qid"), col("vec_id").as("va"), col("vb"), col("psim"))
         .localCheckpoint(true) // |q|·POOL² rows, constant
-      val w1 = pool.filter(col("rk") === 1)
+      // Each greedy step reads the previous picks ONCE, so the plan
+      // grows linearly in K without a per-step cut and the lane pins
+      // only its two tables (RetrievalLeakSpec): one broadcast join of
+      // the picks against the pairs plus self rows (va = vb, no sim)
+      // yields every candidate's penalty (max sim to a pick) and, on a
+      // self row, that it is a pick already, with its pick and score.
+      // (Reading the picks three times — penalty join, anti-join, next
+      // union — grew the plan geometrically in K.)
+      val pairsSelf = pairs.withColumn("self", lit(false))
+        .unionByName(pool.select(col("qid"), col("vec_id").as("va"), col("vec_id").as("vb"),
+          lit(null).cast("double").as("psim"), lit(true).as("self")))
+      var picks = pool.filter(col("rk") === 1)
         .select(col("qid"), col("vec_id"), col("rel"),
-          expr("0.5D * rel").as("score"))
-        // per-round cuts (r15): each greedy step's pick is ≤|q| rows,
-        // but the OLD lazy unroll referenced round i−1's sel in THREE
-        // places inside round i (pen join, anti-join, next union), so
-        // the final action re-canonicalized a plan tree whose size
-        // grew geometrically with K — the same class of cost the r10
-        // lineage-cut sweep removed elsewhere. K−1 extra tiny eager
-        // jobs buy a constant-depth plan per round. Same joins, same
-        // window, same floats — the oracle is untouched.
-        .localCheckpoint(true)
-      var sel = w1.select(col("qid"), col("vec_id"))
-      var picks = w1.withColumn("pick", lit(1L))
+          expr("0.5D * rel").as("score"), lit(1L).as("pick"))
       for (i <- 2 to K) {
-        val pen = pairs.join(broadcast(
-            sel.select(col("qid").as("pq"), col("vec_id").as("pv"))),
+        val hit = pairsSelf.join(broadcast(picks.select(col("qid").as("pq"),
+            col("vec_id").as("pv"), col("score").as("ps"), col("pick").as("pp"))),
             col("qid") === col("pq") && col("vb") === col("pv"))
-          .groupBy(col("qid"), col("va")).agg(max(col("psim")).as("pen"))
-        val scored = pool.join(broadcast(sel), Seq("qid", "vec_id"), "left_anti")
-          .join(broadcast(pen.select(col("qid").as("gq"), col("va"), col("pen"))),
+          .groupBy(col("qid").as("gq"), col("va"))
+          .agg(max(when(!col("self"), col("psim"))).as("pen"),
+            max(when(col("self"), col("pp"))).as("old_pick"),
+            max(when(col("self"), col("ps"))).as("old_score"))
+        val picked = col("old_pick").isNotNull
+        val wn = Window.partitionBy(col("qid"), picked)
+          .orderBy(col("score").desc, col("vec_id"))
+        picks = pool.join(broadcast(hit),
             col("qid") === col("gq") && col("vec_id") === col("va"))
-          .withColumn("score", expr("0.5D * rel - 0.5D * pen"))
-        val wn = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("vec_id"))
-        val wi = scored.withColumn("rn", row_number().over(wn)).filter(col("rn") === 1)
-          .select(col("qid"), col("vec_id"), col("rel"), col("score"))
-          .localCheckpoint(true)
-        picks = picks.unionByName(wi.withColumn("pick", lit(i.toLong)))
-        sel = sel.unionByName(wi.select(col("qid"), col("vec_id")))
+          .withColumn("score",
+            when(picked, col("old_score")).otherwise(expr("0.5D * rel - 0.5D * pen")))
+          .withColumn("rn", row_number().over(wn))
+          .filter(picked || col("rn") === 1)
+          .select(col("qid"), col("vec_id"), col("rel"), col("score"),
+            coalesce(col("old_pick"), lit(i.toLong)).as("pick"))
       }
       picks.select(col("qid"), col("pick"), col("vec_id"), col("rel"), col("score"))
     }

@@ -141,7 +141,7 @@ object Sources {
     * is inserted. Constant-size dim — broadcast is right at every SF. */
   /** One-time-per-process setup for [[dppPrune]], keyed on the SF dir:
     * the partitioned orders copy + dim parquet are pure functions of
-    * the input, so repeated invocations (bench min-of-2, RunOne loops)
+    * the input, so repeated invocations (Bench's second and third samples)
     * should time the pruned join, not re-pay the full write I/O. Same
     * idea as the corpus cache, but process-local (scratch is per-pid). */
   private val dppSetupDone =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` output for registered queries to
   * files — the r14 optimization round's plan-evidence deliverable
   * (`plans/r14/<query>_{before,after}.txt`).
@@ -19,13 +17,7 @@ object ExplainDump {
     val suffix = args(1)
     val sfDir = args(2)
     val names = args.drop(3)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.session(8, logLevel = "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

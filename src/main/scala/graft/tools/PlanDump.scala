@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print a query's analyzed + AQE-final executed plan.
   * `runMain graft.tools.PlanDump <query> [sfDir]`.
   */
@@ -9,13 +7,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args.head
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.session(8, logLevel = "ERROR")
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.collect()
     println("==== optimized ====")

@@ -224,6 +224,63 @@ class FunctionsSpec extends SparkSpec {
     assert(rows.exists(_._1 == 0) && rows.exists(_._1 > 0))
   }
 
+  // Runs `exprs` over a one-row non-literal input (no constant folding,
+  // no local-relation shortcut), with whole-stage codegen on and off.
+  private def bothPaths[A](exprs: String*)(read: org.apache.spark.sql.DataFrame => A): Seq[A] =
+    Seq("true", "false").map { ws =>
+      spark.conf.set("spark.sql.codegen.wholeStage", ws)
+      try read(spark.range(1).selectExpr(exprs: _*))
+      finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    }
+
+  test("inter_size counts a value repeated in the larger array once") {
+    VectorFunctions.register(spark)
+    val a = "array(concat('a', CAST(id AS STRING)), 'b')"
+    val b = "array(concat('a', CAST(id AS STRING)), 'a0', 'b', 'b', 'c')"
+    val got = bothPaths(s"inter_size($a, $b) AS x", s"size(array_intersect($a, $b)) AS y")(
+      _.as[(Int, Int)].head())
+    got.foreach { case (x, y) => assert(x == y && y == 2, s"inter_size $x vs $y") }
+    // interpreted path: the local-relation rows are evaluated without codegen
+    val rows = Seq((Seq("a", "b"), Seq("a", "a", "b", "b", "c")), (Seq("a", "a"), Seq("a", "b")))
+      .toDF("w1", "w2")
+      .selectExpr("inter_size(w1, w2) AS x", "size(array_intersect(w1, w2)) AS y")
+      .as[(Int, Int)].collect()
+    rows.foreach { case (x, y) => assert(x == y, s"inter_size $x vs $y") }
+  }
+
+  test("simhash16 rejects a null element loudly on both eval paths") {
+    VectorFunctions.register(spark)
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    val withNull = "simhash16(array(md5(CAST(id AS STRING)), IF(id >= 0, NULL, md5('x'))))"
+    bothPaths(withNull) { df =>
+      val e = intercept[Exception](df.collect())
+      assert(messages(e).exists(_.contains("md5 hex")),
+        s"expected md5-hex guard, got: ${messages(e).mkString(" | ")}")
+    }
+    val interp = intercept[IllegalArgumentException] {
+      graft.functions.SimHash16(org.apache.spark.sql.catalyst.expressions.Literal.create(
+        Seq(null), org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)))
+        .eval(org.apache.spark.sql.catalyst.InternalRow.empty)
+    }
+    assert(interp.getMessage.contains("md5 hex"))
+  }
+
+  test("register fills in every missing name, not only when the last is absent") {
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    def has(n: String) = reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n))
+    // a session that already holds only some of the names, the last included
+    VectorFunctions.specs.zipWithIndex.filter(_._2 % 2 == 1).foreach { case ((n, _, b), _) =>
+      reg.createOrReplaceTempFunction(n, b, "built-in")
+    }
+    assert(has(VectorFunctions.specs.last._1))
+    assert(!VectorFunctions.specs.forall(sp => has(sp._1)))
+    VectorFunctions.register(fresh)
+    VectorFunctions.specs.foreach { case (n, _, _) => assert(has(n), s"$n not registered") }
+    assert(fresh.sql("SELECT cosine_sim(array(1F, 0F), array(1F, 0F))").head().getDouble(0) == 1.0)
+  }
+
   test("l2_dist_sq/_at reject non-float element types at analysis") {
     VectorFunctions.register(spark)
     val df = Seq((Array(1, 2, 3), Array(1.0, 2.0, 3.0))).toDF("a", "b")
