@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -92,19 +92,24 @@ final case class QueryEvent(
 final class HealthMonitor(spark: SparkSession) extends StreamingQueryListener {
 
   private val events = new ConcurrentLinkedQueue[QueryEvent]()
+  // runId → query name for runs not yet terminated: Spark's terminated
+  // event carries no name
+  private val names = new ConcurrentHashMap[String, String]()
 
   private def now() = new java.sql.Timestamp(System.currentTimeMillis())
 
-  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+    Option(e.name).foreach(names.put(e.runId.toString, _))
     events.add(QueryEvent(now(), e.name, e.runId.toString, "started", -1L, -1L, None))
+  }
 
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
     events.add(QueryEvent(now(), e.progress.name, e.progress.runId.toString,
       "progress", e.progress.batchId, e.progress.numInputRows, None))
 
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-    events.add(QueryEvent(now(), null, e.runId.toString, "terminated", -1L, -1L,
-      e.exception))
+    events.add(QueryEvent(now(), names.remove(e.runId.toString), e.runId.toString,
+      "terminated", -1L, -1L, e.exception))
 
   def attach(): this.type = { spark.streams.addListener(this); this }
   def detach(): Unit = spark.streams.removeListener(this)

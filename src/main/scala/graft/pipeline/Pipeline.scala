@@ -11,9 +11,37 @@ import org.apache.spark.sql.types._
   * All routing is declarative (filters over codegen'd `try_cast`
   * expressions), so Catalyst keeps the whole thing in one
   * WholeStageCodegen pass per sink — no driver loops, no RDD hops.
-  * At scale: one scan of the source batch, two filtered writes.
+  * The grouped sink ([[sinkBatch]]) scans the pinned batch once for all
+  * K targets: one projection CASE-selects each row's typed cells by its
+  * query, so a micro-batch is two write actions (good rows, dead
+  * letters) whatever K is.
   */
 object Pipeline {
+
+  /** Internal carried-column names. corrie's query strings and target
+    * schemas are caller-controlled and unbounded, so a plain `body` /
+    * `query` column would collide with a target field of the same name
+    * (dropping both, or silently overwriting the user's data). The
+    * double-underscore names are reserved and rejected in [[route]]
+    * and [[sinkBatch]]; dead letters rename back to the external `body`
+    * at the sink boundary. */
+  val BodyCol = "__graft_body"
+  val QueryTagCol = "__graft_query"
+  private val reserved = Set(BodyCol, QueryTagCol)
+
+  private def requireUnreserved(schemas: Map[String, StructType]): Unit =
+    schemas.foreach { case (q, schema) =>
+      val clash = schema.fieldNames.filter(reserved)
+      require(clash.isEmpty,
+        s"target schema for '$q' uses reserved column(s): ${clash.mkString(",")}")
+    }
+
+  /** The md5 of a query string: its sink key (a 32-bit hashCode can
+    * collide and silently mix two targets' schemas in one place). */
+  private def queryKey(q: String): String =
+    graft.multimodal.Codecs.md5hex(q.getBytes("UTF-8"))
+
+  private def sinkTable(q: String): String = "SINK_" + queryKey(q).toUpperCase
 
   /** Parse + tag: one unconditional projection that extracts the
     * envelope into plain columns (`query`, `data`, `decode_ok`).
@@ -23,17 +51,6 @@ object Pipeline {
     * skips conditionally-evaluated exprs) — extracting here keeps
     * exactly ONE parse per row for the whole downstream routing tree.
     * A message without a Query is as dead as corrupt JSON. */
-  /** Internal carried-column names. corrie's query strings and target
-    * schemas are caller-controlled and unbounded, so a plain `body` /
-    * `query` column would collide with a target field of the same name
-    * (dropping both, or silently overwriting the user's data). The
-    * double-underscore names are reserved and rejected in [[route]];
-    * dead letters rename back to the external `body` at the sink
-    * boundary. */
-  val BodyCol = "__graft_body"
-  val QueryTagCol = "__graft_query"
-  private val reserved = Set(BodyCol, QueryTagCol)
-
   def parse(raw: DataFrame, bodyCol: String = "body"): DataFrame = {
     raw
       .select(col(bodyCol).as(BodyCol), Messages.decode(col(bodyCol)).as("p"))
@@ -49,7 +66,8 @@ object Pipeline {
   /** Per-cell coercion ladder for one target column (mirrors
     * makeCHArray, reference writer/writer.go:250-277): try the target
     * type; a null result from a non-null cell is a cast failure.
-    * Missing cells (index beyond Data) are failures too. */
+    * Missing cells (index beyond Data) are failures too. Returns the
+    * (unnamed) typed value and its validity. */
   private def castCell(i: Int, f: StructField): (Column, Column) = {
     val cell = expr(s"try_element_at(data, ${i + 1})")
     val castV = f.dataType match {
@@ -61,7 +79,7 @@ object Pipeline {
       case StringType => lit(true)
       case _ => castV.isNotNull
     })
-    (castV.as(f.name), ok)
+    (castV, ok)
   }
 
   /** Add the routing verdicts as plain columns — `known` (target
@@ -89,44 +107,63 @@ object Pipeline {
       .withColumn("cast_ok", castOkByQuery)
   }
 
-  /** Split one parsed batch into (typed good rows for `query`,
-    * dead letters). Dead letters carry the ORIGINAL body verbatim
+  /** Dead letters of a verdict-tagged batch: the ORIGINAL body verbatim
     * (reference reader/reader.go:168-179 forwards raw m.Body) plus a
     * reason: decode_error | unknown_query (≙ prepare failure, whole
     * group) | cast_error (≙ row-level exec failure). */
-  def route(
-      parsed0: DataFrame,
-      schemas: Map[String, StructType] = Messages.targetSchemas): RoutedBatch = {
-    schemas.foreach { case (q, schema) =>
-      val clash = schema.fieldNames.filter(reserved)
-      require(clash.isEmpty,
-        s"target schema for '$q' uses reserved column(s): ${clash.mkString(",")}")
-    }
-    val parsed =
-      if (parsed0.columns.contains("cast_ok")) parsed0
-      else withVerdicts(parsed0, schemas)
+  private def deadLetters(parsed: DataFrame): DataFrame = {
     val reason = when(!col("decode_ok"), "decode_error")
       .when(!col("known"), "unknown_query")
       .when(!col("cast_ok"), "cast_error")
+    parsed
+      .withColumn("reason", reason)
+      .filter(col("reason").isNotNull)
+      .select(col(BodyCol).as("body"), col("reason"))
+  }
+
+  /** Split one parsed batch into (typed good rows for `query`,
+    * dead letters), one frame per query group. */
+  def route(
+      parsed0: DataFrame,
+      schemas: Map[String, StructType] = Messages.targetSchemas): RoutedBatch = {
+    requireUnreserved(schemas)
+    val parsed =
+      if (parsed0.columns.contains("cast_ok")) parsed0
+      else withVerdicts(parsed0, schemas)
 
     // within a `query === q` filter the CASE-selected cast_ok IS that
     // target's row validity, so the lanes only re-evaluate the (cheap,
     // survivor-only) cast values — never the validity conjunction
     val perQuery = schemas.map { case (q, schema) =>
-      val cells = schema.fields.zipWithIndex.map { case (f, i) => castCell(i, f) }
+      val cells = schema.fields.zipWithIndex.map { case (f, i) => castCell(i, f)._1.as(f.name) }
       val matching = parsed.filter(col("decode_ok") && col("query") === q)
-      val good = matching.filter(col("cast_ok"))
-        .select(col(BodyCol) +: cells.map(_._1): _*)
-      val deadCast = matching.filter(!col("cast_ok"))
-        .select(col(BodyCol).as("body"), lit("cast_error").as("reason"))
-      q -> GroupResult(good, deadCast, schema)
+      val good = matching.filter(col("cast_ok")).select(col(BodyCol) +: cells: _*)
+      q -> GroupResult(good, deadLetters(matching), schema)
+    }
+    RoutedBatch(perQuery, deadLetters(parsed))
+  }
+
+  /** `CASE WHEN query = q₁ THEN v₁ WHEN query = q₂ THEN v₂ … END`:
+    * null for any query not listed. */
+  private def byQuery(branches: Seq[(String, Column)]): Column =
+    branches.tail.foldLeft(when(col("query") === branches.head._1, branches.head._2)) {
+      case (acc, (q, v)) => acc.when(col("query") === q, v)
     }
 
-    val allDead = parsed
-      .withColumn("reason", reason)
-      .filter(col("reason").isNotNull)
-      .select(col(BodyCol).as("body"), col("reason"))
-    RoutedBatch(perQuery, allDead)
+  /** Every target's typed cells as one set of columns, one per distinct
+    * field name, in `unionByName(allowMissingColumns = true)` order: the
+    * first target's fields, then each later target's new names. Each is
+    * a CASE over the targets that declare the name, so a row of a
+    * target lacking it carries null. Where targets disagree on a name's
+    * type, Spark's CASE coercion widens the branches with the rule a
+    * union applies to its children (`findWiderCommonType`). */
+  private def mergedCells(schemas: Map[String, StructType]): Seq[Column] = {
+    val cells = schemas.toSeq.flatMap { case (q, schema) =>
+      schema.fields.zipWithIndex.map { case (f, i) => (f.name, q, castCell(i, f)._1) }
+    }
+    cells.map(_._1).distinct.map { name =>
+      byQuery(cells.collect { case (`name`, q, v) => q -> v }).as(name)
+    }
   }
 
   /** Parse and pin one micro-batch in executor memory (spilling to
@@ -162,16 +199,18 @@ object Pipeline {
       val batch = route(parsed, schemas)
       // executeBatch round size for Spark's JDBC writer — the
       // reference's CORRIE_BATCH=1000 (Dockerfile:35); callers may
-      // override via props
-      if (props.getProperty("batchsize") == null)
-        props.setProperty("batchsize", "1000")
+      // override via props. Defaulted on a copy: callers reuse one
+      // Properties across batches.
+      val writeProps = new java.util.Properties()
+      writeProps.putAll(props)
+      if (writeProps.getProperty("batchsize") == null)
+        writeProps.setProperty("batchsize", "1000")
       batch.groups.foreach { case (q, g) =>
-        val table = "SINK_" + graft.multimodal.Codecs.md5hex(q.getBytes("UTF-8")).toUpperCase
         // Derby folds unquoted identifiers to uppercase; the JDBC read
         // side restores the original names
         val up = g.good.select(g.good.columns.map(c => col(c).as(c.toUpperCase)): _*)
         Retry.withBackoff() {
-          up.write.mode("append").jdbc(url, table, props)
+          up.write.mode("append").jdbc(url, sinkTable(q), writeProps)
         }
       }
       Retry.withBackoff() {
@@ -219,9 +258,8 @@ object Pipeline {
       // and the checkpointed blocks can never be recomputed (a lost
       // block fails the job instead of silently re-inserting)
       execDead = batch.groups.map { case (q, g) =>
-        val table = "SINK_" + graft.multimodal.Codecs.md5hex(q.getBytes("UTF-8")).toUpperCase
         RowIsolatedJdbcSink
-          .writeIsolated(g.goodWithBody, g.schema, urls, table, chunkSize, strategy)
+          .writeIsolated(g.goodWithBody, g.schema, urls, sinkTable(q), chunkSize, strategy)
           .toDF()
       }.reduceOption(_ union _).map(_.localCheckpoint(eager = true))
       val allDead = execDead.fold(batch.dead)(batch.dead.union)
@@ -234,37 +272,39 @@ object Pipeline {
     }
   }
 
-  /** Batched grouped parquet sink (§2A-9): ONE dynamic-partition append
-    * covers every query group — rows are tagged with the md5 of their
-    * query string (a 32-bit hashCode can collide and silently mix two
-    * targets' schemas in one directory) and written with
-    * `partitionBy(__graft_query)`, so the job count per micro-batch is 2
-    * (good + dead) regardless of group cardinality. corrie's query
-    * strings are unbounded (SURVEY §1.3) — a job per group would make
-    * jobs-per-microbatch scale with data, the classic driver bottleneck.
-    * Heterogeneous target schemas merge by name (absent columns null),
-    * which parquet partition discovery reassembles on read. Dead
-    * letters are written before the batch is declared done, mirroring
-    * ack-after-commit ordering (writer/writer.go:177-186); writes are
-    * wrapped in the corrie retry policy; the pinned batch is released
-    * afterwards (≙ buffers cleared post-flush). */
+  /** Batched grouped parquet sink (§2A-9), in one pass over the pinned
+    * batch for all K targets (≙ corrie's single flush over its buffer,
+    * writer/writer.go:177-248). The good rows are one projection:
+    * [[mergedCells]] CASE-selects each row's typed cells by its query,
+    * and `__graft_query` CASE-selects the md5 of the query string. ONE
+    * dynamic-partition append (`partitionBy(__graft_query)`) writes
+    * every group, so a micro-batch is 2 write actions (good + dead) and
+    * one scan of P tasks regardless of group cardinality. corrie's query
+    * strings are unbounded (SURVEY §1.3) — a job or a scan per group
+    * would make the batch's cost scale with data, the classic driver
+    * bottleneck. Heterogeneous target schemas merge by name (absent
+    * columns null), which parquet partition discovery reassembles on
+    * read. Dead letters are written before the batch is declared done,
+    * mirroring ack-after-commit ordering (writer/writer.go:177-186);
+    * writes are wrapped in the corrie retry policy; the pinned batch is
+    * released afterwards (≙ buffers cleared post-flush). */
   def sinkBatch(
       raw: DataFrame, outDir: String,
       schemas: Map[String, StructType] = Messages.targetSchemas): Unit = {
+    requireUnreserved(schemas)
     val parsed = parseMaterialized(raw, schemas = schemas)
     try {
-      val batch = route(parsed, schemas)
-      val tagged = batch.groups.map { case (q, g) =>
-        val safe = graft.multimodal.Codecs.md5hex(q.getBytes("UTF-8"))
-        g.good.withColumn(QueryTagCol, lit(safe))
-      }.reduceOption(_.unionByName(_, allowMissingColumns = true))
-      tagged.foreach { t =>
+      if (schemas.nonEmpty) {
+        val tag = byQuery(schemas.keys.toSeq.map(q => q -> lit(queryKey(q))))
+        val good = parsed
+          .filter(col("decode_ok") && col("known") && col("cast_ok"))
+          .select(mergedCells(schemas) :+ tag.as(QueryTagCol): _*)
         Retry.withBackoff() {
-          t.write.mode("append").partitionBy(QueryTagCol).parquet(s"$outDir/good")
+          good.write.mode("append").partitionBy(QueryTagCol).parquet(s"$outDir/good")
         }
       }
       Retry.withBackoff() {
-        batch.dead.write.mode("append").json(s"$outDir/failed")
+        deadLetters(parsed).write.mode("append").json(s"$outDir/failed")
       }
     } finally parsed.unpersist(blocking = false)
   }

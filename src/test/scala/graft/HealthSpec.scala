@@ -87,6 +87,10 @@ class HealthSpec extends SparkSpec {
         s"both micro-batches must report progress, saw $batches")
       assert(rows.forall(_.isNullAt(2)), "clean run must carry no error")
       assert(mon.lastEvent(runId).contains("terminated"))
+      val names = mon.statusTable().filter(col("runId") === runId)
+        .select("name").collect().map(_.getString(0)).toSeq
+      assert(names.forall(_ == "graft_health_probe"),
+        s"every transition must carry the query name: $names")
     } finally mon.detach()
   }
 }

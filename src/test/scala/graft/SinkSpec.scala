@@ -1,15 +1,25 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.pipeline.{Messages, Pipeline, RowIsolatedJdbcSink}
 import graft.queries.Scratch
 
 /** Sink-boundary semantics: per-row failure isolation inside the JDBC
-  * write, and job-count scaling of the grouped parquet sink. */
+  * write, job-count scaling of the grouped parquet sink, and the grouped
+  * sink's single pass checked against the per-target union it replaced. */
 class SinkSpec extends SparkSpec {
 
   private def derbyUrl(name: String): String = {
@@ -114,5 +124,114 @@ class SinkSpec extends SparkSpec {
     val line = good.filter(col(Pipeline.QueryTagCol) === lineKey)
     assert(line.select("l_orderkey").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
     assert(line.select("p_partkey").collect().forall(_.isNullAt(0)))
+  }
+
+  /** Walks executed plans into AQE stages. */
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  private def md5(q: String): String =
+    graft.multimodal.Codecs.md5hex(q.getBytes("UTF-8"))
+
+  /** A wire message in corrie's envelope. */
+  private def body(q: String, cells: String*): String =
+    s"""{"Query":"$q","Data":[${cells.map("\"" + _ + "\"").mkString(",")}]}"""
+
+  test("grouped parquet sink writes what the per-target union wrote, in one scan") {
+    import spark.implicits._
+    val qA = "INSERT INTO t.a (id, qty, name) VALUES (?, ?, ?);"
+    val qB = "INSERT INTO t.b (id, note) VALUES (?, ?);"
+    val qC = "INSERT INTO t.c (qty, flag, id) VALUES (?, ?, ?);"
+    // `id` BIGINT in every target; `qty` INT in a but BIGINT in c, so the
+    // union widens it; `note` and `flag` each belong to one target
+    val schemas = Map(
+      qA -> StructType(Seq(StructField("id", LongType),
+        StructField("qty", IntegerType), StructField("name", StringType))),
+      qB -> StructType(Seq(StructField("id", LongType), StructField("note", StringType))),
+      qC -> StructType(Seq(StructField("qty", LongType),
+        StructField("flag", BooleanType), StructField("id", LongType))))
+    val corpus = Seq(
+      body(qA, "1", "10", "x"), body(qA, "2", "20", "y"),
+      body(qB, "3", "hello"), body(qB, "4", "world"),
+      body(qC, "5000000000", "true", "5"), body(qC, "6", "false", "6"),
+      body(qA, "7", "not_an_int", "z"),                  // cast_error
+      "{not json",                                        // decode_error
+      body("INSERT INTO t.none (x) VALUES (?);", "8")     // unknown_query
+    ).toDF("body")
+
+    // the sink as it was: one filtered branch per target, md5-tagged and
+    // joined by name
+    val ref = Scratch.fresh("sinkspec_union_ref")
+    val pinned = Pipeline.parseMaterialized(corpus, schemas = schemas)
+    try {
+      val batch = Pipeline.route(pinned, schemas)
+      batch.groups.map { case (q, g) => g.good.withColumn(Pipeline.QueryTagCol, lit(md5(q))) }
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+        .write.partitionBy(Pipeline.QueryTagCol).parquet(s"$ref/good")
+      batch.dead.write.json(s"$ref/failed")
+    } finally pinned.unpersist(blocking = true)
+
+    val out = Scratch.fresh("sinkspec_single_pass")
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.sinkBatch(corpus, out, schemas)
+      // listener delivery is async — wait for both write actions
+      val deadline = System.currentTimeMillis() + 30000
+      while (plans.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+
+    // schema: names, types (qty widened to BIGINT), order and nullability
+    val got = spark.read.parquet(s"$out/good")
+    val want = spark.read.parquet(s"$ref/good")
+    assert(got.schema == want.schema)
+    assert(got.schema.map(f => f.name -> f.dataType) == Seq(
+      "id" -> LongType, "qty" -> LongType, "name" -> StringType,
+      "note" -> StringType, "flag" -> BooleanType, Pipeline.QueryTagCol -> StringType))
+    // one directory per target, named by the md5 of its query
+    def tags(dir: String) = new java.io.File(dir).list().filter(_.contains("=")).toSet
+    assert(tags(s"$out/good") == tags(s"$ref/good"))
+    assert(tags(s"$out/good") == Set(qA, qB, qC).map(q => s"${Pipeline.QueryTagCol}=${md5(q)}"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) == rows(want))
+    assert(got.count() == 6)
+    assert(got.filter(col("qty") === 5000000000L).count() == 1)
+
+    val dead = spark.read.json(s"$out/failed").select("body", "reason")
+    assert(rows(dead) == rows(spark.read.json(s"$ref/failed").select("body", "reason")))
+    assert(dead.select("reason").as[String].collect().sorted.toSeq ==
+      Seq("cast_error", "decode_error", "unknown_query"))
+
+    // the good write reads the pinned batch once, with no union of branches
+    val goodWrites = plans.asScala.toSeq.filter(_.collectFirst {
+      case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+        if c.partitionColumns.nonEmpty => c
+    }.isDefined)
+    assert(goodWrites.size == 1, s"expected one partitioned write, saw ${goodWrites.size}")
+    val nodes = Plans.collect(goodWrites.head) { case p => p }
+    assert(!nodes.exists(_.isInstanceOf[UnionExec]), goodWrites.head.treeString)
+    assert(nodes.count(_.isInstanceOf[InMemoryTableScanExec]) == 1, goodWrites.head.treeString)
+  }
+
+  test("sinkBatchJdbc defaults batchsize on a copy, not on the caller's Properties") {
+    import spark.implicits._
+    val url = derbyUrl("derby_sinkspec_props_db")
+    val table = "SINK_" + md5(Messages.lineSinkQuery).toUpperCase
+    RowIsolatedJdbcSink.dropTable(url, table)
+    val callerProps = new java.util.Properties()
+    callerProps.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    val corpus = Seq(
+      body(Messages.lineSinkQuery, "1", "1", "5.0", "N"),
+      body(Messages.lineSinkQuery, "2", "1", "7.0", "A")).toDF("body")
+
+    Pipeline.sinkBatchJdbc(corpus, url, callerProps, Scratch.fresh("sinkspec_props_dead"))
+
+    assert(callerProps.getProperty("batchsize") == null,
+      "the caller's Properties must come back as it was given")
+    assert(spark.read.jdbc(url, table, props).count() == 2)
   }
 }
