@@ -214,7 +214,7 @@ object Pipeline {
         }
       }
       Retry.withBackoff() {
-        batch.dead.write.mode("append").json(deadDir)
+        LocalFs.write(batch.dead).mode("append").json(deadDir)
       }
     } finally parsed.unpersist(blocking = false)
   }
@@ -264,10 +264,12 @@ object Pipeline {
       }.reduceOption(_ union _).map(_.localCheckpoint(eager = true))
       val allDead = execDead.fold(batch.dead)(batch.dead.union)
       Retry.withBackoff() {
-        allDead.write.mode("append").json(deadDir)
+        LocalFs.write(allDead).mode("append").json(deadDir)
       }
     } finally {
-      execDead.foreach(_.unpersist(blocking = false))
+      // a localCheckpoint's pinned RDD is not in the relation cache, so
+      // Dataset.unpersist would leave it pinned
+      execDead.foreach(graft.queries.Fixpoint.release)
       parsed.unpersist(blocking = false)
     }
   }
@@ -286,8 +288,10 @@ object Pipeline {
     * columns null), which parquet partition discovery reassembles on
     * read. Dead letters are written before the batch is declared done,
     * mirroring ack-after-commit ordering (writer/writer.go:177-186);
-    * writes are wrapped in the corrie retry policy; the pinned batch is
-    * released afterwards (≙ buffers cleared post-flush). */
+    * writes are wrapped in the corrie retry policy and go through
+    * [[LocalFs.write]], so a local sink sets file modes without forking
+    * a `chmod` per created file; the pinned batch is released afterwards
+    * (≙ buffers cleared post-flush). */
   def sinkBatch(
       raw: DataFrame, outDir: String,
       schemas: Map[String, StructType] = Messages.targetSchemas): Unit = {
@@ -300,11 +304,11 @@ object Pipeline {
           .filter(col("decode_ok") && col("known") && col("cast_ok"))
           .select(mergedCells(schemas) :+ tag.as(QueryTagCol): _*)
         Retry.withBackoff() {
-          good.write.mode("append").partitionBy(QueryTagCol).parquet(s"$outDir/good")
+          LocalFs.write(good).mode("append").partitionBy(QueryTagCol).parquet(s"$outDir/good")
         }
       }
       Retry.withBackoff() {
-        deadLetters(parsed).write.mode("append").json(s"$outDir/failed")
+        LocalFs.write(deadLetters(parsed)).mode("append").json(s"$outDir/failed")
       }
     } finally parsed.unpersist(blocking = false)
   }

@@ -95,11 +95,11 @@ object UpsertState {
   /** Write the (empty) init generation. */
   def init(s: SparkSession, stateRoot: String): Unit = {
     new File(stateRoot).mkdirs()
-    s.range(0).select(
+    val empty = s.range(0).select(
         col("id").as("user_id"), col("id").as("last_event_id"),
         col("id").cast("double").as("last_value"))
       .repartition(1)
-      .write.mode("overwrite").parquet(s"$stateRoot/gen_init")
+    LocalFs.write(empty).mode("overwrite").parquet(s"$stateRoot/gen_init")
   }
 
   private def rm(f: File): Unit = {
@@ -183,7 +183,7 @@ object UpsertState {
     val next = s"$stateRoot/gen_$id"
     val stage = new File(s"$stateRoot/stage_$id")
     rm(stage) // leftover from a merge that crashed before its swap
-    merged.write.mode("overwrite").parquet(stage.getPath)
+    LocalFs.write(merged).mode("overwrite").parquet(stage.getPath)
     // the staged merge is fully materialized; now swap crash-atomically
     val dst = new File(next)
     val tomb = new File(next + ".old")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * as soon as its successor exists (at most two generations ever
   * pinned; ComponentsLeakSpec / BfsLeakSpec pin the bound).
   */
-private[queries] object Fixpoint {
+private[graft] object Fixpoint {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong(0)
 

@@ -1,10 +1,18 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -14,12 +22,13 @@ import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationComm
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.pipeline.{Messages, Pipeline, RowIsolatedJdbcSink}
+import graft.pipeline.{LocalFs, Messages, Pipeline, RowIsolatedJdbcSink}
 import graft.queries.Scratch
 
 /** Sink-boundary semantics: per-row failure isolation inside the JDBC
-  * write, job-count scaling of the grouped parquet sink, and the grouped
-  * sink's single pass checked against the per-target union it replaced. */
+  * write, job-count scaling of the grouped parquet sink, the grouped
+  * sink's single pass checked against the per-target union it replaced,
+  * and the on-disk modes of its writes, set without forking `chmod`. */
 class SinkSpec extends SparkSpec {
 
   private def derbyUrl(name: String): String = {
@@ -54,7 +63,12 @@ class SinkSpec extends SparkSpec {
         col("l_quantity"), col("l_returnflag"))).as("body"))
     val deadDir = Scratch.fresh("sinkspec_dead")
 
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
     Pipeline.sinkBatchJdbcIsolated(corpus, url, deadDir)
+    // the batch's pinned parse and the checkpointed exec failures are
+    // both released
+    assert(spark.sparkContext.getPersistentRDDs.size == pinnedBefore,
+      s"pinned RDDs: ${spark.sparkContext.getPersistentRDDs.keys.toSeq.sorted}")
 
     val back = spark.read.jdbc(url, table, props)
     assert(back.count() == 4)
@@ -233,5 +247,67 @@ class SinkSpec extends SparkSpec {
     assert(callerProps.getProperty("batchsize") == null,
       "the caller's Properties must come back as it was given")
     assert(spark.read.jdbc(url, table, props).count() == 2)
+  }
+
+  /** A small grouped-sink batch: good rows, a cast error, a decode error. */
+  private def smallCorpus = {
+    import spark.implicits._
+    Seq(
+      body(Messages.lineSinkQuery, "1", "1", "5.0", "N"),
+      body(Messages.lineSinkQuery, "2", "1", "7.0", "A"),
+      body(Messages.lineSinkQuery, "x", "1", "7.0", "A"),
+      "{not json").toDF("body")
+  }
+
+  test("sinkBatch forks no chmod") {
+    val out = Scratch.fresh("sinkspec_nochmod")
+    val canonical = new File(out).getCanonicalPath
+    val rec = new Recording()
+    val events = try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try Pipeline.sinkBatch(smallCorpus, out) finally rec.stop()
+      val jfr = Paths.get(Scratch.path("sinkspec_nochmod.jfr"))
+      rec.dump(jfr)
+      RecordingFile.readAllEvents(jfr).asScala.map(_.getString("command")).toSeq
+    } finally rec.close()
+    val chmods = events.filter(c => c.contains("chmod") &&
+      (c.contains(out) || c.contains(canonical)))
+    assert(chmods.size == 0, s"chmod forks, e.g. ${chmods.take(3)}")
+    // the write itself happened
+    assert(spark.read.parquet(s"$out/good").count() == 2)
+  }
+
+  test("grouped sink writes files rw-r--r--, directories rwxr-xr-x, with .crc files") {
+    val out = Scratch.fresh("sinkspec_modes")
+    Pipeline.sinkBatch(smallCorpus, out)
+    for (sub <- Seq("good", "failed")) {
+      val all = scala.util.Using.resource(Files.walk(Paths.get(out, sub)))(_.iterator().asScala.toSeq)
+      def mode(p: java.nio.file.Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      val (dirs, files) = all.partition(Files.isDirectory(_))
+      assert(dirs.nonEmpty && files.nonEmpty)
+      dirs.foreach(d => assert(mode(d) == "rwxr-xr-x", d))
+      files.foreach(f => assert(mode(f) == "rw-r--r--", f))
+      val names = files.map(_.getFileName.toString)
+      assert(names.exists(n => n.startsWith(".part-") && n.endsWith(".crc")), names)
+      assert(names.contains("_SUCCESS") && names.contains("._SUCCESS.crc"), names)
+    }
+  }
+
+  test("LocalFs.setPermission sets the mode bits; a sticky-bit mode takes Hadoop's path") {
+    val fs = new LocalFs
+    fs.initialize(java.net.URI.create("file:///"), new Configuration())
+    val dir = new File(Scratch.fresh("sinkspec_setperm"))
+    val f = new File(dir, "f")
+    assert(f.createNewFile())
+    def unixMode(file: File) = Files.getAttribute(file.toPath, "unix:mode").asInstanceOf[Int] & 0xfff
+    def octal(m: String) = Integer.parseInt(m, 8)
+    for (m <- Seq("644", "755", "700", "600").map(octal)) {
+      fs.setPermission(new Path(f.getPath), new FsPermission(m.toShort))
+      assert(unixMode(f) == m, f"want 0$m%o, got 0${unixMode(f)}%o")
+    }
+    // 01777: nio cannot set the sticky bit, so Hadoop's own chmod does
+    fs.setPermission(new Path(dir.getPath), new FsPermission(octal("1777").toShort))
+    assert(unixMode(dir) == octal("1777"), f"want 01777, got 0${unixMode(dir)}%o")
   }
 }
