@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
   * Without libhadoop, Hadoop's `RawLocalFileSystem.setPermission` forks
   * a `chmod` child process, and it runs for every file and directory a
   * write creates (parts, `.crc`s, attempt, partition and `_temporary`
-  * directories, `_SUCCESS`): ~100 forks per micro-batch of the grouped
+  * directories, `_SUCCESS`): about 90 forks per call of the grouped
   * sink. Here the same mode bits go through
   * `Files.setPosixFilePermissions`; a mode nio cannot express (sticky,
   * setuid, setgid) or a store without POSIX attributes takes Hadoop's
